@@ -842,7 +842,9 @@ def cluster_pair_cosines(
         import numpy as np
         import pandas as pd
 
-        def finish(out: dict, n_pairs: int, labels) -> "pd.DataFrame":
+        def finish(
+            out: dict, n_rows: int, n_pairs: int, labels
+        ) -> "pd.DataFrame":
             if not emit_group_size:
                 return pd.DataFrame(out, columns=out_cols)
             # sentinel row first: full group size BEFORE the keep
@@ -865,7 +867,7 @@ def cluster_pair_cosines(
         dim = max(dims) if dims else 0
         keep = [i for i, d in enumerate(dims) if d == dim]
         if len(keep) < 2:
-            return finish({}, 0, labels)
+            return finish({}, n_rows, 0, labels)
         pdf = pdf.iloc[keep]
         # id-sort so (i < j) positions == (ka < kb) ids
         pdf = pdf.sort_values(id_col, kind="mergesort")
@@ -886,6 +888,6 @@ def cluster_pair_cosines(
             vals = pdf[c].to_numpy()
             out[f"{c}_a"] = vals[ii]
             out[f"{c}_b"] = vals[jj]
-        return finish(out, len(ii), labels)
+        return finish(out, n_rows, len(ii), labels)
 
     return df.groupBy(*label_cols).applyInPandas(per_cluster, out_schema)

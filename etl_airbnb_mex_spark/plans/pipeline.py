@@ -4,8 +4,10 @@ The reference runs eager sequential phases through an ETLManager
 (src/main.py:224-263) holding every table in driver RAM between phases.
 Here each table is ONE lazy plan — scan → transform expressions → write —
 so Spark pipelines extract+transform+load per partition with no
-whole-table materialization; the driver only ever holds per-table counts
-for the run report (S11/S12).
+whole-table materialization, and the write is the table's only action:
+its extract and load counts are observed by that write, not counted by
+jobs of their own before and after it. The driver only ever holds
+per-table counts for the run report (S11/S12).
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ from ..sources.writers import (
     write_json_report,
     write_parquet_overwrite,
 )
-from .metrics import MetricsCollector
+from .metrics import MetricsCollector, observe_count
 from .transforms import TRANSFORMS
 
 
@@ -41,10 +43,23 @@ def run_pipeline(
     table. Returns the run report dict (S12 shape: per-table extracted /
     transformed / loaded counts + timings, src/main.py:175-222).
 
-    Counts are real actions (each forces the plan); the load itself
-    re-uses the same plan, so a table is scanned at most twice (once for
-    the pre-count, once for the write+verify) — the reference scans each
-    table once per *step*.
+    Each table with an input path runs exactly one action, the parquet
+    write, so its source is scanned once; the reference scans each table
+    once per *step*. Two row counters ride on that write:
+
+    * ``extraidos`` counts the extracted rows (after ``limit``), below
+      the transform's dedup shuffle. A map task Spark re-runs after a
+      fetch failure is counted again, so on a retried stage this count
+      can exceed the rows read.
+    * ``cargados`` (= ``transformados``) counts the rows handed to the
+      writer, in the write's own result stage, where each task's count
+      is taken once. This is the S11 verification: the count of what
+      was persisted, pinned to a re-read of the output by a test.
+
+    A table with no input path is recorded as zeros without running a
+    Spark job (the reference's missing calendar, log:31); one whose input
+    is present but empty is written (an empty table with the sink schema)
+    and reports zeros.
     """
     unknown_parts = sorted(set(partition_spec or {}) - set(input_paths))
     if unknown_parts:
@@ -63,37 +78,36 @@ def run_pipeline(
 
     tables = read_table_set(spark, input_paths, fmt=fmt)
     for name, raw in tables.items():
-        if limit is not None:
-            # S1/O3 — the reference's --limite extraction cap
-            # (find().limit(n)); Catalyst pushes the LocalLimit to the
-            # scan, so capped runs never read the full source.
-            raw = raw.limit(limit)
         t0 = time.perf_counter()
-        extracted = mc.timed_count(f"extraccion_{name}", raw)
-        if extracted == 0:
-            # Missing/empty collection: recorded, not fatal (the
-            # reference's calendar case, log:31 / report:36).
+        if input_paths.get(name) is None:
+            # Missing collection: recorded, not fatal (the reference's
+            # calendar case, log:31 / report:36).
             report["tablas"][name] = {
                 "extraidos": 0, "transformados": 0, "cargados": 0,
                 "segundos": round(time.perf_counter() - t0, 3),
             }
             continue
-        transformed_df = _transform(name, raw)
+        if limit is not None:
+            # S1/O3 — the reference's --limite extraction cap
+            # (find().limit(n)); Catalyst pushes the LocalLimit to the
+            # scan, so capped runs never read the full source.
+            raw = raw.limit(limit)
+        raw, extracted = observe_count(raw, f"extraccion_{name}")
         out_path = os.path.join(output_dir, f"raw_{name}_transformado")
-        sink_df = normalize_for_sink(drop_id_columns(transformed_df))
+        sink_df, written = observe_count(
+            normalize_for_sink(drop_id_columns(_transform(name, raw))),
+            f"carga_{name}",
+        )
         # 100 TB sink posture: partitioned writes (e.g. reviews by año)
         # give readers partition pruning and writers full parallelism.
         partitions = (partition_spec or {}).get(name, ())
-        with mc.timed(f"carga_{name}"):
+        with mc.timed(f"carga_{name}") as load:
             write_parquet_overwrite(sink_df, out_path, partition_by=partitions)
-        # S11 verification: count what was actually persisted.
-        loaded = mc.timed_count(
-            f"verificacion_{name}", spark.read.parquet(out_path)
-        )
+        load.rows = written.get["filas"]
         report["tablas"][name] = {
-            "extraidos": extracted,
-            "transformados": loaded,
-            "cargados": loaded,
+            "extraidos": extracted.get["filas"],
+            "transformados": load.rows,
+            "cargados": load.rows,
             "columnas": len(sink_df.columns),
             "ruta": out_path,
             "segundos": round(time.perf_counter() - t0, 3),

@@ -91,6 +91,12 @@ def ensure_parity_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def local_cpus() -> int:
+    """Task slots of a local session: ``$SPARK_GRAFT_CPUS`` when set,
+    else the cores this machine reports (at least one)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(
     app_name: str = "etl-airbnb-mex-spark",
     master: str | None = None,
@@ -99,11 +105,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
-    Local dev/test runs ``local[$SPARK_GRAFT_CPUS]`` (default 32); on a
-    real cluster the master comes from spark-submit and this factory only
-    contributes conf.
+    Local dev/test runs ``local[$SPARK_GRAFT_CPUS]``, by default one
+    slot per core this machine reports (``os.cpu_count()``), so a box
+    without the variable never runs more task slots than it has cores;
+    on a real cluster the master comes from spark-submit and this
+    factory only contributes conf.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -135,8 +143,9 @@ def get_spark(
         # aware, not just per-partition (r11 hard lesson): the gate
         # compares COMPRESSED shuffle bytes, the in-memory
         # LongToUnsafeRowMap is ~4-6× that, SHJ build sides CANNOT
-        # spill, and all 32 slots build at once — at 64 MiB the r10
-        # setting passed the gate at sf24 (orders build side ≈ 18 MiB
+        # spill, and every task slot builds at once (32 in the r10/r11
+        # ``local[32]`` runs) — at 64 MiB the r10 setting passed the
+        # gate at sf24 (orders build side ≈ 18 MiB
         # compressed/partition) and died in
         # cannotAcquireMemoryToBuildLongHashedRelation: 32 × ~100 MB
         # maps ≈ the whole 8g-heap execution pool. Safe bound =
@@ -145,8 +154,10 @@ def get_spark(
         # SMJ, which sorts but never OOMs, while q5/q9's post-filter
         # build sides (≤ 8 MiB/partition through sf8) keep the SHJ
         # win. The bound is :func:`shj_local_map_threshold` (unit-
-        # tested so the formula can't rot); 16 MiB = the local-shape
-        # bound rounded down to a power of two. On a real cluster
+        # tested so the formula can't rot); 16 MiB = the 32-slot
+        # local-shape bound rounded down to a power of two, so it is
+        # also safe for sessions with fewer slots (the bound grows as
+        # slots shrink: ~205 MiB at 4). On a real cluster
         # recompute via shj_local_map_threshold(executor_mem, cores)
         # and set SPARK_GRAFT_SHJ_THRESHOLD.
         .config(

@@ -338,8 +338,9 @@ def test_full_pipeline_run(spark, tmp_path_factory):
 
 
 def test_pipeline_reports_action_metrics(spark, tmp_path_factory):
-    """S12 + §3.1.f — the run report carries per-action metrics
-    (extraction/load/verification wall clocks and plan heads)."""
+    """S12 + §3.1.f — the run report carries per-action metrics: one
+    timed load per written table, whose row count is the one the write
+    observed (the extract and verify counts ride on that write)."""
     from etl_airbnb_mex_spark.plans.pipeline import run_pipeline
 
     tmp = tmp_path_factory.mktemp("etl_metrics")
@@ -350,11 +351,126 @@ def test_pipeline_reports_action_metrics(spark, tmp_path_factory):
         spark, {"reviews": str(tmp / "reviews_raw")}, str(tmp / "out")
     )
     actions = {a["accion"]: a for a in report["acciones"]}
-    assert "extraccion_reviews" in actions
-    assert "carga_reviews" in actions
-    assert "verificacion_reviews" in actions
-    assert actions["verificacion_reviews"]["filas"] == 5
+    assert list(actions) == ["carga_reviews"]
+    assert actions["carga_reviews"]["filas"] == 5
+    assert report["tablas"]["reviews"]["extraidos"] == 5
     assert all(a["duracion_ms"] >= 0 for a in report["acciones"])
+
+
+def _write_inputs(spark, tmp, tables: dict) -> dict[str, str]:
+    """Write each ``name -> rows`` as a parquet input with the declared
+    reader schema; returns the pipeline's ``input_paths``."""
+    from etl_airbnb_mex_spark.sources.readers import AIRBNB_SCHEMAS
+
+    paths = {}
+    for name, rows in tables.items():
+        paths[name] = str(tmp / f"{name}_raw")
+        schema = AIRBNB_SCHEMAS[name]
+        spark.createDataFrame(
+            [tuple(r[f] for f in schema.fieldNames()) for r in rows], schema
+        ).write.parquet(paths[name])
+    return paths
+
+
+def _parity_case(case: str):
+    """(inputs, run_pipeline keyword arguments) of one parity case."""
+    reviews = [make_review(id=i, listing_id=1 + i % 3,
+                           date=f"20{20 + i % 3}-06-15") for i in range(1, 21)]
+    if case == "plain":
+        return {"listings": [make_listing(id=i) for i in range(1, 9)],
+                "reviews": reviews}, {}
+    if case == "limit":
+        return {"reviews": reviews}, {"limit": 7}
+    if case == "partitioned":
+        return {"reviews": reviews}, {"partition_spec": {"reviews": ("año",)}}
+    if case == "dup_null_ids":
+        return {
+            "listings": [make_listing(id=i % 4) for i in range(10)]
+            + [make_listing(id=None), make_listing(id=None)],
+            "reviews": reviews + reviews[:5] + [make_review(id=None)] * 3,
+        }, {}
+    if case == "empty_input":
+        return {"reviews": []}, {}
+    raise ValueError(case)
+
+
+@pytest.mark.parametrize(
+    "case", ["plain", "limit", "partitioned", "dup_null_ids", "empty_input"]
+)
+def test_observed_counts_match_eager_counts(spark, tmp_path_factory, case):
+    """The counts ``run_pipeline`` observes during the write equal the
+    eager counts they replace: ``extraidos`` = ``raw.count()`` of the
+    (limited) input, ``cargados`` = ``spark.read.parquet(out).count()``.
+
+    Retry caveat, not exercised here: the load counter sits in the
+    write's result stage, so each task is counted once, but the extract
+    counter sits below the dedup shuffle, so a map task re-run after a
+    fetch failure adds its rows to ``extraidos`` again."""
+    from etl_airbnb_mex_spark.plans.pipeline import run_pipeline
+    from etl_airbnb_mex_spark.plans.transforms import TRANSFORMS
+    from etl_airbnb_mex_spark.sources.readers import (
+        AIRBNB_SCHEMAS,
+        read_parquet,
+    )
+    from etl_airbnb_mex_spark.sources.writers import (
+        drop_id_columns,
+        normalize_for_sink,
+    )
+
+    tmp = tmp_path_factory.mktemp(f"etl_parity_{case}")
+    tables, kwargs = _parity_case(case)
+    paths = _write_inputs(spark, tmp, tables)
+    report = run_pipeline(spark, paths, str(tmp / "out"), **kwargs)
+
+    for name, path in paths.items():
+        got = report["tablas"][name]
+        raw = read_parquet(spark, path, AIRBNB_SCHEMAS[name])
+        if "limit" in kwargs:
+            raw = raw.limit(kwargs["limit"])
+        out = spark.read.parquet(got["ruta"])
+        assert got["extraidos"] == raw.count()
+        assert got["cargados"] == got["transformados"] == out.count()
+        if case == "empty_input":
+            assert got["extraidos"] == got["cargados"] == 0
+            empty = spark.createDataFrame([], AIRBNB_SCHEMAS[name])
+            sink = normalize_for_sink(drop_id_columns(TRANSFORMS[name](empty)))
+            assert [(f.name, f.dataType) for f in out.schema] == [
+                (f.name, f.dataType) for f in sink.schema
+            ]
+    if case == "limit":
+        assert report["tablas"]["reviews"]["extraidos"] == 7
+    if case == "dup_null_ids":
+        # 12 rows − 2 NULL ids − 6 duplicates of ids 0..3 = 4 listings
+        assert report["tablas"]["listings"]["cargados"] == 4
+        assert report["tablas"]["reviews"]["cargados"] == 20
+
+
+def test_pipeline_runs_one_write_per_table(spark, tmp_path_factory):
+    """Job-count guard: a present table costs its write's jobs (at most
+    a shuffle-map job and the write job), an absent one costs none. A
+    count of jobs, so machine load cannot move it; an eager count or
+    verify re-read slipping back in would fail it."""
+    from etl_airbnb_mex_spark.plans.pipeline import run_pipeline
+
+    tmp = tmp_path_factory.mktemp("etl_jobs")
+    paths = _write_inputs(spark, tmp, {
+        "listings": [make_listing(id=i) for i in range(1, 9)],
+        "reviews": [make_review(id=i) for i in range(1, 21)],
+    })
+    sc = spark.sparkContext
+
+    def jobs_of(group: str, inputs: dict) -> list[int]:
+        sc.setJobGroup(group, group)
+        try:
+            run_pipeline(spark, inputs, str(tmp / group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    # calendar absent: two present tables, at most two jobs each
+    assert 0 < len(jobs_of("etl_jobs_present", paths)) <= 2 * 2
+    # every table absent: no Spark job at all
+    assert jobs_of("etl_jobs_absent", {}) == []
 
 
 def test_quality_report_on_transformed_reviews(reviews_out):
@@ -491,6 +607,23 @@ def test_corpus_pipeline_scrubs_planted_pii(spark):
            for r in corpus_pipeline(docs, min_tokens=3).collect()}
     assert "<EMAIL>" in got[1] and "@" not in got[1]
     assert "<IP>" in got[2] and "10.1.2.3" not in got[2]
+
+
+def test_local_cpus_defaults_to_machine_cores(monkeypatch):
+    """Without ``$SPARK_GRAFT_CPUS`` a local session gets one task slot
+    per core the machine reports, not a fixed 32."""
+    import os
+
+    from etl_airbnb_mex_spark.session import local_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cpus() == (os.cpu_count() or 1)
+    monkeypatch.setattr(os, "cpu_count", lambda: 3)
+    assert local_cpus() == 3
+    monkeypatch.setattr(os, "cpu_count", lambda: None)
+    assert local_cpus() == 1
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    assert local_cpus() == 6
 
 
 def test_shj_threshold_formula_matches_shipped_conf():
